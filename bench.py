@@ -108,6 +108,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # validated before the session starts: a bad value must fail in
+    # seconds, not when the detail file is written at the end of the run
+    if not cpus.isdigit() or int(cpus) < 1:
+        sys.exit(f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}")
 
     from target_iceberg_spark.plans import all_specs
     from target_iceberg_spark.session import get_spark

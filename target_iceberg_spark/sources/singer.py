@@ -10,10 +10,10 @@ SDK-inherited listen loop; sinks.py:20-41 — per-stream buffering with
 Two ingestion paths, same semantics:
 
   * :class:`SingerTarget` — the parity path. A driver-side listen loop:
-    demux messages per stream, buffer up to ``max_batch_size`` records,
-    drain each full buffer (and all buffers at STATE/EOF) through the
-    writer as one Spark batch. Matches the reference's lifecycle
-    (SURVEY §3) including at-least-once STATE emission.
+    demux messages per stream, buffer up to ``max_batch_size`` raw
+    RECORD lines, drain each full buffer (and all buffers at STATE/EOF)
+    through the writer as one Spark batch. Matches the reference's
+    lifecycle (SURVEY §3) including at-least-once STATE emission.
 
   * :func:`demux_singer_file` — the scale path the reference lacks.
     For bulk backfills (a 100 TB pile of Singer JSONL on object
@@ -22,6 +22,17 @@ Two ingestion paths, same semantics:
     RECORD lines per stream, and parse them executor-side with
     ``from_json`` under the translated schema. One Spark job per
     stream, fully parallel, no driver round-trip.
+
+RECORD and BATCH payloads are typed by one JVM-side parse,
+:func:`parse_json_rows`. A drain hands its buffered lines to Spark as a
+single Arrow string column (the reference hands its batch over as Arrow
+too, sinks.py:82), so no Python rows are pickled and no Python worker
+is started; BATCH manifest files are read as text and go through the
+same parse. One malformed-record policy covers both: ``from_json`` runs
+in FAILFAST mode, a value that does not fit the stream schema (``"x"``
+for an integer, ``2024-02-30``, a missing non-nullable field) fails the
+write, and the failure is raised as a ``ValueError`` naming the stream.
+Nothing lands and no STATE passes it.
 """
 
 from __future__ import annotations
@@ -29,12 +40,14 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
-from datetime import date, datetime, timezone
 from typing import Any
 
+import pyarrow as pa
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import DataType, DateType, StructType, TimestampType
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 from target_iceberg_spark.bounded import bounded_collect
 from target_iceberg_spark.schema import json_schema_to_struct_type
@@ -42,27 +55,57 @@ from target_iceberg_spark.writer import StreamWriter
 
 DEFAULT_MAX_BATCH_SIZE = 10_000  # reference sinks.py:18
 
-
-def _coerce_value(value: Any, dtype: DataType) -> Any:
-    """Parse ISO strings into temporal types for createDataFrame (the
-    reference gets this via pyarrow's string->timestamp cast in
-    ``pa.Table.from_pylist``, sinks.py:82)."""
-    if value is None:
-        return None
-    if isinstance(dtype, TimestampType) and isinstance(value, str):
-        dt = datetime.fromisoformat(value.replace("Z", "+00:00"))
-        if dt.tzinfo is not None:  # normalize to UTC naive (session tz is UTC)
-            dt = dt.astimezone(timezone.utc).replace(tzinfo=None)
-        return dt
-    if isinstance(dtype, DateType) and isinstance(value, str):
-        return date.fromisoformat(value)
-    if isinstance(dtype, StructType) and isinstance(value, dict):
-        return {f.name: _coerce_value(value.get(f.name), f.dataType) for f in dtype.fields}
-    return value
+# FAILFAST: a value that does not fit its field fails the job instead of
+# turning into a silent NULL. Dates are RFC 3339 full-dates only: Spark's
+# lenient fallback would read "20240203" as the year 20240203.
+_PARSE_OPTIONS = {"mode": "FAILFAST", "dateFormat": "yyyy-MM-dd"}
+# error classes of a parse failure: from_json's, and the null guard's
+_PARSE_ERRORS = ("MALFORMED_RECORD_IN_PARSING", "USER_RAISED_EXCEPTION")
 
 
-def _coerce_record(record: dict[str, Any], schema: StructType) -> dict[str, Any]:
-    return {f.name: _coerce_value(record.get(f.name), f.dataType) for f in schema.fields}
+def parse_json_rows(
+    text: DataFrame, schema: StructType, envelope: bool = False, extracted: bool = False
+) -> DataFrame:
+    """Type the JSON in ``text``'s ``value`` column as rows of ``schema``.
+
+    ``envelope``: each value is a whole RECORD message and the row is its
+    ``record``; otherwise each value is a bare record (a BATCH file
+    line). ``extracted`` (envelope only) adds ``_sdc_extracted_at``: the
+    message's ``time_extracted``, or the current time when it has none
+    (the SDK's ``time_extracted or now``).
+
+    ``from_json`` ignores nullability, so each non-nullable top-level
+    field gets a ``raise_error`` guard."""
+    if envelope:
+        parts = [StructField("record", schema)]
+        if extracted:
+            parts.append(StructField("time_extracted", TimestampType()))
+        parsed_schema = StructType(parts)
+    else:
+        parsed_schema = schema
+    parsed = text.select(F.from_json("value", parsed_schema, _PARSE_OPTIONS).alias("m"))
+    row = F.col("m.record") if envelope else F.col("m")
+    cols = []
+    for f in schema.fields:
+        c = row[f.name]
+        if not f.nullable:
+            c = F.when(c.isNull(), F.raise_error(
+                F.lit(f"non-nullable field {f.name!r} is missing or null"))).otherwise(c)
+        cols.append(c.alias(f.name))
+    if envelope and extracted:
+        cols.append(F.coalesce(F.col("m.time_extracted"), F.current_timestamp())
+                    .alias("_sdc_extracted_at"))
+    return parsed.select(*cols)
+
+
+def _parse_failure(exc: Py4JJavaError | PySparkException) -> str | None:
+    """The line of a Spark error that reports a parse failure, if any."""
+    for line in str(exc).splitlines():
+        for marker in _PARSE_ERRORS:
+            i = line.find(f"[{marker}")
+            if i >= 0:
+                return line[i:].strip()
+    return None
 
 
 @dataclass
@@ -73,9 +116,7 @@ class _StreamState:
     name: str
     schema: StructType
     key_properties: list[str]
-    buffer: list[dict[str, Any]] = field(default_factory=list)
-    # per-record time_extracted, parallel to buffer (None when absent)
-    extracted: list[datetime | None] = field(default_factory=list)
+    buffer: list[str] = field(default_factory=list)  # raw RECORD lines
     records_written: int = 0
     batches_written: int = 0
     version: int | None = None  # Singer table version (ACTIVATE_VERSION)
@@ -116,7 +157,7 @@ class SingerTarget:
         if mtype == "SCHEMA":
             self._handle_schema(msg)
         elif mtype == "RECORD":
-            self._handle_record(msg)
+            self._handle_record(msg, line)
         elif mtype == "STATE":
             # STATE only re-emitted after preceding records are durable:
             # at-least-once, like the SDK (SURVEY §2 A15).
@@ -162,20 +203,19 @@ class SingerTarget:
             name=name, schema=schema, key_properties=key_properties
         )
 
-    def _handle_record(self, msg: dict[str, Any]) -> None:
+    def _handle_record(self, msg: dict[str, Any], line: str) -> None:
         name = msg["stream"]
         if name not in self.streams:
             raise ValueError(f"RECORD for stream {name!r} before its SCHEMA")
+        if not isinstance(msg.get("record"), dict):
+            raise ValueError(f"RECORD for stream {name!r} has no record object")
         stream = self.streams[name]
         if msg.get("version") is not None:
             stream.version = int(msg["version"])
-        stream.buffer.append(_coerce_record(msg["record"], stream.schema))
-        # RECORD's optional time_extracted feeds _sdc_extracted_at
-        # (SDK metadata, SURVEY §2 A12) when the writer stamps metadata
-        te = msg.get("time_extracted")
-        stream.extracted.append(
-            _coerce_value(te, TimestampType()) if isinstance(te, str) else None
-        )
+        # the raw line is typed at drain time, in the JVM; its optional
+        # time_extracted feeds _sdc_extracted_at (SDK metadata, SURVEY §2
+        # A12) when the writer stamps metadata
+        stream.buffer.append(line)
         if len(stream.buffer) >= self.max_batch_size:
             self._drain(stream)
 
@@ -216,10 +256,10 @@ class SingerTarget:
         already written records to files — JSONL, one bare record dict
         per line — and sends a manifest of paths. The reference's SDK
         parses these; this engine routes them down the distributed bulk
-        path: the files are read as a text DataFrame and parsed
-        executor-side with ``from_json`` (same plan as
-        :func:`demux_singer_file`), skipping the driver-side record
-        buffer entirely — which is the point of BATCH at scale."""
+        path: the files are read as a text DataFrame and typed
+        executor-side by :func:`parse_json_rows`, the parse a RECORD
+        drain uses, skipping the driver-side record buffer entirely —
+        which is the point of BATCH at scale."""
         name = msg.get("stream", "")
         if name not in self.streams:
             raise ValueError(f"BATCH for stream {name!r} before its SCHEMA")
@@ -234,76 +274,66 @@ class SingerTarget:
         self._drain(stream)
         # gzip et al. are handled by the text source via file extension
         paths = [p.removeprefix("file://") for p in manifest]
-        parsed = (
+        text = (
             self.spark.read.text(paths)
             # trim: a whitespace-only separator line is blank, not a
-            # malformed record — without it the loud-fail check below
-            # would reject the whole batch over a stray " \n"
+            # malformed record
             .where(F.trim(F.col("value")) != "")
-            .select(F.from_json("value", stream.schema).alias("r"))
         )
-        # One aggregation pass counts raw non-empty lines AND rows that
-        # survived the schema parse. A malformed line becomes a NULL
-        # struct under from_json; silently filtering it would shrink the
-        # table with no signal — the buffered RECORD path (and the
-        # reference SDK) fails loudly on malformed records, so the bulk
-        # path must too (at-least-once, never silent loss).
-        stats = parsed.agg(
-            F.count(F.lit(1)).alias("raw"), F.count("r").alias("ok")
-        ).first()
-        if stats["ok"] < stats["raw"]:
-            raise ValueError(
-                f"BATCH for stream {name!r}: {stats['raw'] - stats['ok']} of "
-                f"{stats['raw']} lines in {paths} failed to parse under the "
-                "stream schema"
-            )
-        df = parsed.where(F.col("r").isNotNull()).select("r.*")
-        self._write_df(stream, df, stats["ok"])
+        # FAILFAST: every non-blank line either lands or fails the write,
+        # so the line count is the record count
+        self._write_df(
+            stream,
+            parse_json_rows(text, stream.schema),
+            text.count(),
+            f"BATCH for stream {name!r}: a line in {paths}",
+        )
 
-    def _write_df(self, stream: _StreamState, df: DataFrame, n_records: int) -> None:
+    def _write_df(
+        self, stream: _StreamState, df: DataFrame, n_records: int, source: str
+    ) -> None:
+        """Write one parsed batch. A parse failure surfaces here, when the
+        write runs the parse; it is raised as a ValueError that names
+        ``source``."""
         if stream.version is not None:
             df = df.withColumn(
                 "_sdc_table_version", F.lit(stream.version).cast("long")
             )
         else:
             stream.wrote_untagged = True
-        if self.upsert_on_keys and stream.key_properties:
-            self.writer.upsert(df, stream.name, stream.key_properties)
-        else:
-            self.writer.append(df, stream.name)
+        try:
+            if self.upsert_on_keys and stream.key_properties:
+                self.writer.upsert(df, stream.name, stream.key_properties)
+            else:
+                self.writer.append(df, stream.name)
+        except (Py4JJavaError, PySparkException) as exc:
+            detail = _parse_failure(exc)
+            if detail is None:
+                raise
+            raise ValueError(
+                f"{source} failed to parse under the stream schema: {detail}"
+            ) from exc
         stream.records_written += n_records
         stream.batches_written += 1
 
     def _drain(self, stream: _StreamState) -> None:
         if not stream.buffer:
             return
+        text = self.spark.createDataFrame(
+            pa.table({"value": pa.array(stream.buffer, pa.string())})
+        )
         add_meta = getattr(self.writer.config, "add_record_metadata", False)
-        if add_meta and any(e is not None for e in stream.extracted):
-            # attach per-record time_extracted; records lacking it get
-            # the drain time (the SDK's `time_extracted or now` default)
-            from pyspark.sql.types import StructField
-
-            schema = StructType(
-                list(stream.schema.fields)
-                + [StructField("_sdc_extracted_at", TimestampType(), True)]
-            )
-            rows = [
-                {**r, "_sdc_extracted_at": e}
-                for r, e in zip(stream.buffer, stream.extracted)
-            ]
-            df = self.spark.createDataFrame(rows, schema=schema).withColumn(
-                "_sdc_extracted_at",
-                F.coalesce(F.col("_sdc_extracted_at"), F.current_timestamp()),
-            )
-        else:
-            df = self.spark.createDataFrame(stream.buffer, schema=stream.schema)
         n = len(stream.buffer)
-        # clear the buffer only AFTER the write succeeds: a transient
-        # write failure must leave the records buffered so the caller
-        # can retry the drain (at-least-once, never silent loss)
-        self._write_df(stream, df, n)
+        # clear the buffer only AFTER the write succeeds: a failed write
+        # leaves the records buffered so the caller can retry the drain
+        # (at-least-once, never silent loss)
+        self._write_df(
+            stream,
+            parse_json_rows(text, stream.schema, envelope=True, extracted=add_meta),
+            n,
+            f"RECORD for stream {stream.name!r}: one of {n} buffered records",
+        )
         stream.buffer = []
-        stream.extracted = []
 
     def _drain_all(self) -> None:
         for stream in self.streams.values():
